@@ -551,9 +551,9 @@ def q_js_transform(spark, sf_dir):
     (transform.go:236-263) executed by the bundled interpreter
     (datahub_spark.js) against the shared host vocabulary, batch-at-a-
     time inside mapInPandas — a reference job's JavascriptTransform Code
-    block runs verbatim (script.compile_script sniffs the language and
-    decodes the base64 wire format). The Python dialect of the same
-    surface is covered by tests/test_script.py."""
+    block runs verbatim (script.compile_script decodes the base64 wire
+    format). JavaScript is the surface's only language; trusted Python
+    logic goes through transforms.python_transform instead."""
     import datahub_spark.script as SC
 
     code = """

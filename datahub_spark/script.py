@@ -5,19 +5,16 @@ point for the jobs engine.
 
 The reference accepts base64 ES6 defining ``transform_entities(entities)``
 and executes it per batch in a goja sandbox with a fixed built-in
-vocabulary (GetId/SetProperty/Query/...). This engine accepts BOTH
-languages through one entry point (``compile_script``):
-
-- **JavaScript** — the reference's native transform language, so
-  existing job configs run verbatim (base64 or raw source). Scripts run
-  on a bundled interpreter for the transform dialect
-  (datahub_spark.js; no JS engine exists in this container or JVM-side)
-  over the same dict entities the Python path uses — host vocabulary
-  shared, zero conversion.
-- **Python** — the engine-idiomatic language, same entity JSON shape
-  (``{ID, Recorded, IsDeleted, Properties, References}``,
-  entity.go/DOCUMENTATION.md:47-107) and the same built-in names with
-  the same signatures.
+vocabulary (GetId/SetProperty/Query/...). Every script surface here —
+job transforms, ``/query`` JavaScript queries, virtual datasets and
+MultiSource ``track_queries`` — takes JavaScript only, the reference's
+native language, so existing job configs run verbatim (base64 or raw
+source). All of them load through ``load_script``: the source runs on the
+bundled interpreter for the transform dialect (datahub_spark.js; no JS
+engine exists in this container or JVM-side) with the host vocabulary
+bound over plain dict entities (``{ID, Recorded, IsDeleted, Properties,
+References}``, entity.go/DOCUMENTATION.md:47-107). Source that is not JS
+fails to parse there; nothing else executes a script string.
 
 Execution model (the 100 TB design):
 - The script runs ONCE per Arrow batch inside ``mapInPandas`` — batch
@@ -38,8 +35,10 @@ Execution model (the 100 TB design):
   sequential counter (store.go:289) — deterministic everywhere, stable
   across runs.
 
-Scripts are trusted code, same trust level as a ``python_transform``
-callable or the reference's sandbox-with-host-functions.
+Scripts are client input and reach the interpreter only, the analogue of
+the reference's sandbox-with-host-functions. Trusted in-process Python
+logic takes a callable instead: ``transforms.python_transform`` /
+``safe_python_transform``.
 """
 
 from __future__ import annotations
@@ -323,7 +322,9 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
         Outgoing: follow refs[predicate] of each start (target entity from
         the lookup index; bare {ID} stub if the target isn't indexed —
         the reference returns open-world URIs the same way). Inverse:
-        entities whose refs[predicate] contains the start id. A predicate
+        entities whose refs[predicate] contains the start id. Only a
+        holder whose latest version is live has relations, as in
+        query.related; the target's state never gates an edge. A predicate
         of ``"*"`` (or None) traverses EVERY predicate, like the
         reference's Via ``*`` (store.go ToRelatedFrom)."""
         wildcard = predicate in (None, "*")
@@ -341,6 +342,8 @@ def make_builtins(namespaces: dict[str, str], index: dict | None = None,
                     out.append([start, p, _copy(by_id.get(src))])
             else:
                 ent = by_id.get(start)
+                if ent is not None and ent.get("IsDeleted"):
+                    continue  # a tombstone holds no relations
                 for p, targets in sorted(
                         (ent or {}).get("References", {}).items()):
                     if not wildcard and p != predicate:
@@ -450,41 +453,40 @@ def maybe_b64_decode(code: str) -> str:
         return code
 
 
-def compile_script(code: str, namespaces: dict[str, str] | None = None,
-                   index: dict | None = None, log_sink: list | None = None,
-                   txn_sink: list | None = None,
-                   query_result_sink: list | None = None,
-                   language: str = "auto"):
-    """Compile ``code`` with the built-in vocabulary injected and return
-    its ``transform_entities`` callable. Raises on syntax errors or a
-    missing entry point — validation happens driver-side, before any
-    task runs.
+class ScriptError(ValueError):
+    """A script that does not load: it fails to parse, throws while its
+    top level runs, or lacks its entry function. Client input — the
+    server answers 400."""
 
-    ``language``: "python", "js", or "auto" (sniff). JS sources — the
-    reference's native transform language — run on the bundled
-    interpreter (datahub_spark.js) against the SAME dict entities and
-    the SAME host vocabulary, so reference transforms run verbatim;
-    base64-encoded sources (the job-config wire format) are decoded
-    first in either language."""
+
+class MissingEntryError(ScriptError):
+    """The script loads but does not define the requested function."""
+
+
+def load_script(code: str, entry: str, host: dict):
+    """The one script loader: decode base64 if needed, run the JS
+    program with ``host`` bound as globals, and return its ``entry``
+    function."""
     from datahub_spark import js as _js
 
-    code = maybe_b64_decode(code)
-    env: dict = dict(make_builtins(namespaces or DEFAULT_NAMESPACES, index,
-                                   log_sink, txn_sink, query_result_sink))
-    if language == "auto":
-        language = "js" if _js.looks_like_js(code) else "python"
-    if language in ("js", "javascript"):
-        fns = _js.run_program(code, host=env)
-        fn = fns.get("transform_entities")
-        if fn is None:
-            raise ValueError(
-                "script must define transform_entities(entities)")
-        return fn
-    exec(compile(code, "<transform_entities>", "exec"), env)
-    fn = env.get("transform_entities")
-    if not callable(fn):
-        raise ValueError("script must define transform_entities(entities)")
+    try:
+        fns = _js.run_program(maybe_b64_decode(code), host=host)
+    except _js.JSError as exc:
+        raise ScriptError(f"script does not load: {exc}") from exc
+    fn = fns.get(entry)
+    if fn is None:
+        raise MissingEntryError(f"script must define function {entry}")
     return fn
+
+
+def compile_script(code: str, namespaces: dict[str, str] | None = None,
+                   index: dict | None = None, txn_sink: list | None = None):
+    """Load ``code`` with the built-in vocabulary bound and return its
+    ``transform_entities`` callable. Raises ScriptError on syntax errors
+    or a missing entry point — validation happens driver-side, before any
+    task runs."""
+    return load_script(code, "transform_entities", make_builtins(
+        namespaces or DEFAULT_NAMESPACES, index, txn_sink=txn_sink))
 
 
 # Hard cap on the lookup index: Query/FindById indexes are collected to
@@ -525,6 +527,8 @@ def build_lookup_index(*frames: DataFrame,
                     (prev["Recorded"] or 0), (prev["Seq"] or 0)):
                 by_id[ent["ID"]] = ent
     for ent in by_id.values():
+        if ent["IsDeleted"]:
+            continue  # a tombstone holds no relations (query.related)
         for pred, targets in ent["References"].items():
             for t in targets:
                 inverse.setdefault((pred, t), []).append(ent["ID"])
@@ -536,7 +540,7 @@ def build_lookup_index(*frames: DataFrame,
 
 
 # Per-worker-process compiled-script cache: tasks in the same Python
-# worker reuse the compiled entry point instead of re-exec'ing the
+# worker reuse the compiled entry point instead of re-running the
 # source per batch-iterator. Keyed by a CONTENT hash of
 # (code, namespaces, index) — repeat script_transform calls with the
 # same binding hit the same entry (a uuid-per-call key grew one
@@ -616,9 +620,10 @@ def script_transform(df: DataFrame, code: str, *,
 def make_script_transform(code: str, *, lookup: list[DataFrame] | None = None,
                           namespaces: dict[str, str] | None = None):
     """A jobs-engine Transform (DataFrame -> DataFrame callable) from a
-    script string (JavaScript — raw or base64, the reference job-config
-    wire format — or Python; see compile_script) — the analogue of a job
-    config's ``{"Type": "JavascriptTransform", "Code": ...}`` block.
+    JavaScript script string — raw or base64, the reference job-config
+    wire format; see compile_script — the analogue of a job config's
+    ``{"Type": "JavascriptTransform", "Code": ...}`` block. Trusted
+    Python logic uses ``transforms.python_transform`` instead.
     Validates the script immediately (driver-side), not at first job
     run. The returned callable carries ``may_stage_transactions`` so
     Job.run only pays the transaction-routing split (an extra plan
@@ -641,30 +646,19 @@ def run_query_script(spark: SparkSession, code: str, *,
                      entry: str = "do_query") -> list:
     """Driver-side script-query runner — the reference's javascript
     query endpoint (transform.go:561 ExecuteQuery; WriteQueryResult
-    writes objects to the response stream). The script defines
-    ``do_query()`` (any JS/Python body) and calls WriteQueryResult(obj)
-    per result; returns the written objects in order. Runs DRIVER-side
-    against the broadcast lookup index — built from ``lookup`` frames or
-    passed pre-built via ``index`` (query scripts are interactive,
+    writes objects to the response stream). The JavaScript script
+    defines ``do_query()`` and calls WriteQueryResult(obj) per result;
+    returns the written objects in order. Runs DRIVER-side against the
+    broadcast lookup index — built from ``lookup`` frames or passed
+    pre-built via ``index`` (query scripts are interactive,
     bounded-output by construction); set-oriented querying over big data
     belongs in datahub_spark.query / queries."""
-    from datahub_spark import js as _js
-
-    code = maybe_b64_decode(code)
     results: list = []
     if index is None:
         index = build_lookup_index(*lookup) if lookup else None
-    env: dict = dict(make_builtins(namespaces or DEFAULT_NAMESPACES, index,
-                                   query_result_sink=results))
-    if _js.looks_like_js(code):
-        fns = _js.run_program(code, host=env)
-        fn = fns.get(entry)
-    else:
-        exec(compile(code, f"<{entry}>", "exec"), env)
-        fn = env.get(entry)
-    if not callable(fn):
-        raise ValueError(f"script must define {entry}()")
-    fn()
+    load_script(code, entry, make_builtins(
+        namespaces or DEFAULT_NAMESPACES, index,
+        query_result_sink=results))()
     return results
 
 
@@ -672,19 +666,6 @@ def run_query_script(spark: SparkSession, code: str, *,
 # script-built virtual datasets (BuildEntities + Emit host contract,
 # transform.go:578-600)
 # --------------------------------------------------------------------------
-
-def is_js_code(code: str) -> bool:
-    """True when a (possibly base64-encoded) script body is JavaScript.
-
-    The SERVED virtual-dataset path must only ever run the sandboxed JS
-    interpreter — the Python ``exec`` fallback in ScriptVirtualSource is
-    for trusted in-process use and would be remote code execution if
-    reachable from a stored dataset config (the reference confines
-    virtual-dataset transforms to goja, virtualdataset.go)."""
-    from datahub_spark import js as _js
-
-    return _js.looks_like_js(maybe_b64_decode(code))
-
 
 class ScriptVirtualSource:
     """A virtual dataset whose pages are produced by a user script
@@ -714,25 +695,13 @@ class ScriptVirtualSource:
         self.code = code
         self.params = params or {}
         self.dataset = dataset
-        from datahub_spark import js as _js
-
-        code = maybe_b64_decode(code)
-        env: dict = dict(make_builtins(namespaces or DEFAULT_NAMESPACES))
+        # the reference's virtual-dataset language
+        # (DOCUMENTATION.md:288-325): build_entities gets the transform
+        # vocabulary plus Emit
         self._emitted: list[dict] = []
+        env = make_builtins(namespaces or DEFAULT_NAMESPACES)
         env["Emit"] = self._emitted.append
-        if _js.looks_like_js(code):
-            # the reference's native virtual-dataset language
-            # (DOCUMENTATION.md:288-325): the JS build_entities runs
-            # VERBATIM on the bundled interpreter with the same host
-            # vocabulary (incl. Emit) the transforms get
-            fns = _js.run_program(code, host=env)
-            fn = fns.get("build_entities")
-        else:
-            exec(compile(code, "<build_entities>", "exec"), env)
-            fn = env.get("build_entities")
-        if not callable(fn):
-            raise ValueError("script must define build_entities(params, since, limit)")
-        self._fn = fn
+        self._fn = load_script(code, "build_entities", env)
         self.last_token: object = None
 
     def read(self, since: int = 0, limit: int | None = None) -> DataFrame:

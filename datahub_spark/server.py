@@ -46,7 +46,8 @@ from pyspark.sql import functions as F
 from datahub_spark import store as S
 from datahub_spark import uda
 from datahub_spark.namespaces import NamespaceManager
-from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA
+from datahub_spark.script import (SCRIPT_OUTPUT_SCHEMA, ScriptError,
+                                  ScriptVirtualSource)
 
 
 # one element may legitimately be large (a fat props map), but a parser
@@ -262,7 +263,10 @@ class UdaServer:
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
         self._host, self._port = host, port
-        self._index: dict | None = None  # /query lookup, built lazily
+        # /query lookup, built lazily; every committed store write drops
+        # it, whoever made the write (HTTP, job runs, cron ticks)
+        self._index: dict | None = None
+        store.add_listener(lambda _ds, _rec: self.invalidate_query_index())
         # jobs API (jobshandler.go / joboperationhandler.go): attach a
         # jobs.Scheduler to serve /jobs CRUD + /job/{id} operations
         self.scheduler = scheduler
@@ -341,8 +345,6 @@ class UdaServer:
                 self._wal_pending[name] = 0
             if recorded is not None:
                 out[name] = recorded
-        if out:
-            self.invalidate_query_index()
         return out
 
     def _ensure_visible(self, ds: str) -> None:
@@ -584,6 +586,8 @@ class UdaServer:
                 if verb == "changes":
                     return self._get_changes(rq, ds, q)
             self._error(rq, 404, "not found")
+        except ScriptError as exc:  # a GET /query script that does not load
+            self._error(rq, 400, str(exc))
         except Exception as exc:  # a handler bug must not kill the server
             self._error(rq, 500, str(exc))
 
@@ -839,6 +843,8 @@ class UdaServer:
                 self.invalidate_query_index()
                 return self._reply(rq, 200, {})
             self._error(rq, 404, "not found")
+        except ScriptError as exc:
+            self._error(rq, 400, str(exc))
         except Exception as exc:
             self._error(rq, 500, str(exc))
 
@@ -889,16 +895,7 @@ class UdaServer:
         optional JSON body on the GET (the reference forwards any
         request JSON as the params argument); ``since`` is forwarded
         verbatim."""
-        from datahub_spark.script import ScriptVirtualSource, is_js_code
-
         code = vcfg.get("Transform") or vcfg.get("transform") or ""
-        # Served transforms run ONLY on the sandboxed JS interpreter —
-        # the Python exec path in ScriptVirtualSource is for trusted
-        # in-process use and must not be reachable from a stored config
-        # (the reference confines these to goja, virtualdataset.go).
-        if not is_js_code(code):
-            return self._error(
-                rq, 400, "virtual dataset transform must be javascript")
         n = int(rq.headers.get("Content-Length", "0"))
         try:
             params = json.loads(rq.rfile.read(n).decode()) if n else {}
@@ -941,18 +938,14 @@ class UdaServer:
                     rq, 400, "invalid proxy configuration provided")
             extra["ProxyDatasetConfig"] = pc
         elif cfg.get("VirtualDatasetConfig") is not None:
-            from datahub_spark.script import is_js_code
-
             vc = cfg["VirtualDatasetConfig"]
             code = vc.get("Transform") or vc.get("transform")
             if not code:
                 return self._error(
                     rq, 400, "invalid virtual dataset configuration provided")
-            # reject non-JS at create time too — the served read path
-            # only runs the sandboxed JS interpreter
-            if not is_js_code(code):
-                return self._error(
-                    rq, 400, "virtual dataset transform must be javascript")
+            # load it once now: a script that does not parse or lacks
+            # build_entities raises ScriptError (400) and creates nothing
+            ScriptVirtualSource(self.store.spark, code, dataset=ds)
             extra["VirtualDatasetConfig"] = vc
         self.store.create_dataset(
             ds, public_namespaces=cfg.get("publicNamespaces"),
@@ -1245,7 +1238,6 @@ class UdaServer:
                         if r.get("id") == job_id and r.get("error")), None)
             if err:
                 return self._error(rq, 500, err)
-            self.invalidate_query_index()
         else:
             return self._error(rq, 404, f"unknown operation {op}")
         self._reply(rq, 200, {"id": job_id, "operation": op})
@@ -1279,7 +1271,6 @@ class UdaServer:
                     rows, SCRIPT_OUTPUT_SCHEMA).drop("dataset")
         if dataset_entities:
             self.store.execute_transaction(dataset_entities)
-            self.invalidate_query_index()
         self._reply(rq, 200, {})
 
     # -- /query (queryhandler.go) -----------------------------------------
@@ -1501,11 +1492,9 @@ class UdaServer:
                 for b in plain[1:]:
                     batch = batch.unionByName(b)
                 self.store.store_entities(ds, batch)
-                self.invalidate_query_index()
             if fs_end:
                 session = self.leases.release(ds, fs_id)
                 session.complete()
-                self.invalidate_query_index()
             self._reply(rq, 200, {})
         except ConflictError as exc:
             self._error(rq, 409, str(exc))

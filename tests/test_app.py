@@ -17,7 +17,7 @@ from datahub_spark import store as S
 from datahub_spark.app import DatahubInstance
 from datahub_spark.config import (Config, load_config, parse_duration,
                                   read_env_file)
-from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA
+from datahub_spark.script import SCRIPT_OUTPUT_SCHEMA, make_script_transform
 
 
 # -- config ---------------------------------------------------------------
@@ -138,6 +138,14 @@ def _get(url, headers=None):
         return exc.code, json.loads(exc.read().decode() or "{}")
 
 
+def _post(url, payload):
+    req = urllib.request.Request(
+        url, data=json.dumps(payload).encode(), method="POST",
+        headers={"Content-Type": "application/json"})
+    with urllib.request.urlopen(req, timeout=30) as resp:
+        return resp.status, json.loads(resp.read().decode())
+
+
 def test_instance_boot_serves_and_stops(spark, tmp_path):
     cfg = Config(store_location=str(tmp_path / "hub"), port=0)
     inst = DatahubInstance(cfg, spark=spark)
@@ -201,6 +209,48 @@ def test_tick_fires_cron_jobs_and_backup(spark, tmp_path):
     # same minute: neither the job nor the backup re-fires
     assert inst.tick(datetime(2026, 8, 14, 12, 0, 40)) == []
     assert inst._backup_last == datetime(2026, 8, 14, 12, 0)
+
+
+def test_query_index_sees_job_output_written_outside_http(spark, tmp_path):
+    """A cron job fired by the clock tick commits through JobRunner and
+    DatasetSink, not through an HTTP handler; the next /query traversal
+    must still see its output (the server drops its lookup index on
+    every committed store write)."""
+    cfg = Config(store_location=str(tmp_path / "hub"), port=0)
+    inst = DatahubInstance(cfg, spark=spark)
+    df = spark.createDataFrame(
+        [("e:1", None, 0, False, {"p:a": "1"}, None, None)],
+        SCRIPT_OUTPUT_SCHEMA).drop("dataset")
+    inst.store.store_entities("people", df)
+    js = """function transform_entities(entities) {
+        var out = [];
+        for (e of entities) {
+            var link = NewEntity();
+            SetId(link, "link:" + GetId(e));
+            AddReference(link, "p", "of", GetId(e));
+            out.push(link);
+        }
+        return out;
+    }"""
+    inst.scheduler.register(
+        J.Job("link", J.DatasetSource(inst.store, "people"),
+              J.DatasetSink(inst.store, "out"),
+              transform=make_script_transform(js)),
+        schedule="* * * * *")
+    url = inst.server.start()  # the server only: the test drives the clock
+    traverse = {"startingEntities": ["e:1"], "predicate": "p:of",
+                "inverse": True}
+    try:
+        status, body = _post(f"{url}/query", traverse)  # builds the index
+        assert status == 200 and body[1] == []
+        (result,) = inst.tick(datetime(2026, 8, 14, 12, 0, 5))
+        assert "error" not in result
+        status, body = _post(f"{url}/query", traverse)
+        assert status == 200
+        assert [[s, p, e["id"]] for s, p, e in body[1]] == \
+            [["e:1", "p:of", "link:e:1"]]
+    finally:
+        inst.server.stop()
 
 
 def test_main_help(capsys):

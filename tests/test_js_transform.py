@@ -1,8 +1,10 @@
 """JavaScript transform conformance: the reference's OWN transform JS
 (verbatim from internal/jobs/transform_test.go, pipeline_test.go,
 transform.go helper functions) executed through this engine's
-script-transform surface (script.compile_script language=auto ->
-datahub_spark.js interpreter -> mapInPandas batches)."""
+script-transform surface (script.compile_script -> script.load_script ->
+datahub_spark.js interpreter -> mapInPandas batches). JavaScript is the
+only script language; trusted Python logic is a
+``transforms.python_transform`` callable, not a script string."""
 
 from __future__ import annotations
 
@@ -351,14 +353,3 @@ def test_paged_query_stop_and_resume(spark):
     assert props["people:resumedSeen"] == "12"    # resume covers the rest
     assert props["people:contAfterDrain"] == "cont:"
 
-
-def test_python_scripts_still_work(spark, people):
-    # the Python dialect keeps working through the same auto entry
-    code = """
-def transform_entities(entities):
-    for e in entities:
-        SetProperty(e, "p", "lang", "python")
-    return entities
-"""
-    out = SC.script_transform(people, code).collect()
-    assert all(r["props"]["p:lang"] == "python" for r in out)

@@ -33,13 +33,15 @@ def nations(spark):
 def test_property_ops_match_reference_helpers(spark, people):
     # SetProperty/RenameProperty/RemoveProperty — transform.go:46-129
     code = """
-def transform_entities(entities):
-    for e in entities:
-        SetProperty(e, "p", "upper", ToString(GetProperty(e, "p", "name", "")).upper())
-        RenameProperty(e, "p", "name", "p", "fullname")
-        RemoveProperty(e, "p", "tmp")
-        SetProperty(e, "p", "missing", GetProperty(e, "p", "nope", "dflt"))
-    return entities
+function transform_entities(entities) {
+    for (e of entities) {
+        SetProperty(e, "p", "upper", ToString(GetProperty(e, "p", "name", "")).toUpperCase());
+        RenameProperty(e, "p", "name", "p", "fullname");
+        RemoveProperty(e, "p", "tmp");
+        SetProperty(e, "p", "missing", GetProperty(e, "p", "nope", "dflt"));
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in SC.script_transform(people, code).collect()}
     assert out["p:1"] == {"p:upper": "ALICE", "p:fullname": "alice", "p:missing": "dflt"}
@@ -49,12 +51,14 @@ def transform_entities(entities):
 
 def test_refs_deleted_and_id_ops(spark, people):
     code = """
-def transform_entities(entities):
-    for e in entities:
-        AddReference(e, "p", "seen", [PrefixField("x", "1")])
-        SetDeleted(e, GetId(e) == "p:2")
-        SetId(e, GetId(e) + ":v2")
-    return entities
+function transform_entities(entities) {
+    for (e of entities) {
+        AddReference(e, "p", "seen", [PrefixField("x", "1")]);
+        SetDeleted(e, GetId(e) === "p:2");
+        SetId(e, GetId(e) + ":v2");
+    }
+    return entities;
+}
 """
     rows = {r["id"]: r for r in SC.script_transform(people, code).collect()}
     assert rows["p:1:v2"]["refs"]["p:seen"] == ["x:1"]
@@ -64,18 +68,21 @@ def transform_entities(entities):
 def test_emit_and_drop_change_batch_size(spark, people):
     # returned list IS the batch: drop bob, emit a derived entity per row
     code = """
-def transform_entities(entities):
-    out = []
-    for e in entities:
-        if GetProperty(e, "p", "name") == "bob":
-            continue
-        out.append(e)
-        d = NewEntity()
-        SetId(d, "derived:" + GetId(e))
-        SetProperty(d, "p", "src", GetId(e))
-        d["Dataset"] = "derived"
-        out.append(d)
-    return out
+function transform_entities(entities) {
+    var out = [];
+    for (e of entities) {
+        if (GetProperty(e, "p", "name") === "bob") {
+            continue;
+        }
+        out.push(e);
+        var d = NewEntity();
+        SetId(d, "derived:" + GetId(e));
+        SetProperty(d, "p", "src", GetId(e));
+        d["Dataset"] = "derived";
+        out.push(d);
+    }
+    return out;
+}
 """
     rows = SC.script_transform(people, code).collect()
     ids = sorted(r["id"] for r in rows)
@@ -87,13 +94,16 @@ def transform_entities(entities):
 def test_query_and_findbyid_via_broadcast_lookup(spark, people, nations):
     # the documented enrichment pattern (DOCUMENTATION.md:691-706)
     code = """
-def transform_entities(entities):
-    for e in entities:
-        for (start, pred, nat) in Query([GetId(e)], "p:nation", False):
-            SetProperty(e, "p", "nation_name", GetProperty(nat, "p", "name"))
-        direct = FindById("n:1")
-        SetProperty(e, "p", "via_find", GetProperty(direct, "p", "name"))
-    return entities
+function transform_entities(entities) {
+    for (e of entities) {
+        for (const [start, pred, nat] of Query([GetId(e)], "p:nation", false)) {
+            SetProperty(e, "p", "nation_name", GetProperty(nat, "p", "name"));
+        }
+        var direct = FindById("n:1");
+        SetProperty(e, "p", "via_find", GetProperty(direct, "p", "name"));
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in
            SC.script_transform(people, code, lookup=[people, nations]).collect()}
@@ -104,13 +114,16 @@ def transform_entities(entities):
 
 def test_inverse_query(spark, people, nations):
     code = """
-def transform_entities(entities):
-    for e in entities:
-        hits = Query([GetId(e)], "p:nation", True)
-        SetProperty(e, "p", "pop", ToString(len(hits)))
-        if hits:
-            SetProperty(e, "p", "first", GetId(hits[0][2]))
-    return entities
+function transform_entities(entities) {
+    for (e of entities) {
+        var hits = Query([GetId(e)], "p:nation", true);
+        SetProperty(e, "p", "pop", ToString(hits.length));
+        if (hits.length > 0) {
+            SetProperty(e, "p", "first", GetId(hits[0][2]));
+        }
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in
            SC.script_transform(nations, code, lookup=[people, nations]).collect()}
@@ -122,13 +135,15 @@ def test_namespace_builtins_deterministic(spark, people):
     # executor/run (divergence from the reference's sequential counter is
     # documented in script.py)
     code = """
-def transform_entities(entities):
-    known = GetNamespacePrefix("http://example.io/schema/")
-    new = AssertNamespacePrefix("http://other.example/x/")
-    for e in entities:
-        SetProperty(e, known, "ns1", known)
-        SetProperty(e, "p", "ns2", new)
-    return entities
+function transform_entities(entities) {
+    var known = GetNamespacePrefix("http://example.io/schema/");
+    var fresh = AssertNamespacePrefix("http://other.example/x/");
+    for (e of entities) {
+        SetProperty(e, known, "ns1", known);
+        SetProperty(e, "p", "ns2", fresh);
+    }
+    return entities;
+}
 """
     a = {r["id"]: r["props"]["p:ns2"]
          for r in SC.script_transform(people.repartition(2), code).collect()}
@@ -139,10 +154,10 @@ def transform_entities(entities):
 
 
 def test_bad_scripts_fail_driver_side(spark, people):
-    with pytest.raises(SyntaxError):
-        SC.script_transform(people, "def transform_entities(e) return e")
-    with pytest.raises(ValueError, match="transform_entities"):
-        SC.script_transform(people, "x = 1")
+    with pytest.raises(SC.ScriptError, match="does not load"):
+        SC.script_transform(people, "function transform_entities(e) return e")
+    with pytest.raises(SC.ScriptError, match="transform_entities"):
+        SC.script_transform(people, "var x = 1;")
 
 
 def test_script_transform_in_job_pipeline(spark, tmp_path, people):
@@ -154,10 +169,12 @@ def test_script_transform_in_job_pipeline(spark, tmp_path, people):
     es = EntityStore(spark, str(tmp_path / "store"))
     es.store_entities("people", people.drop("dataset"))
     code = """
-def transform_entities(entities):
-    for e in entities:
-        SetProperty(e, "p", "greeting", "hi " + ToString(GetProperty(e, "p", "name", "")))
-    return entities
+function transform_entities(entities) {
+    for (e of entities) {
+        SetProperty(e, "p", "greeting", "hi " + ToString(GetProperty(e, "p", "name", "")));
+    }
+    return entities;
+}
 """
     job = J.Job("greet", J.DatasetSource(es, "people"),
                 J.DatasetSink(es, "greeted"),
@@ -169,30 +186,33 @@ def transform_entities(entities):
 
 
 def test_make_script_transform_validates_eagerly(spark):
-    with pytest.raises(ValueError, match="transform_entities"):
-        SC.make_script_transform("y = 2")
+    with pytest.raises(SC.ScriptError, match="transform_entities"):
+        SC.make_script_transform("var y = 2;")
 
 
 def test_script_virtual_source_pages_with_emit_and_token(spark, tmp_path):
     # BuildEntities/Emit host contract (transform.go:578-600): the script
     # emits a page after `since` and returns the next continuation token
     code = """
-def build_entities(params, since, limit):
-    n = params["n"]
-    emitted = 0
-    last = since
-    for i in range(since, n):
-        if limit is not None and emitted >= limit:
-            break
-        e = NewEntity()
-        SetId(e, PrefixField("v", i))
-        SetProperty(e, "p", "i", ToString(i))
-        e["Recorded"] = i + 1
-        e["Seq"] = 0
-        Emit(e)
-        emitted += 1
-        last = i + 1
-    return last
+function build_entities(params, since, limit) {
+    var n = params["n"];
+    var emitted = 0;
+    var last = since;
+    for (var i = since; i < n; i++) {
+        if (limit !== null && emitted >= limit) {
+            break;
+        }
+        var e = NewEntity();
+        SetId(e, PrefixField("v", i));
+        SetProperty(e, "p", "i", ToString(i));
+        e["Recorded"] = i + 1;
+        e["Seq"] = 0;
+        Emit(e);
+        emitted++;
+        last = i + 1;
+    }
+    return last;
+}
 """
     src = SC.ScriptVirtualSource(spark, code, params={"n": 7}, dataset="virt")
     page1 = src.read(since=0, limit=3).collect()
@@ -217,8 +237,8 @@ def build_entities(params, since, limit):
     job.run(state)
     assert es.log(["virt"]).count() == 7  # no re-emission
 
-    with pytest.raises(ValueError, match="build_entities"):
-        SC.ScriptVirtualSource(spark, "x=1")
+    with pytest.raises(SC.ScriptError, match="build_entities"):
+        SC.ScriptVirtualSource(spark, "var x = 1;")
 
 
 def test_get_dataset_changes_and_latest_wins_lookup(spark):
@@ -231,14 +251,16 @@ def test_get_dataset_changes_and_latest_wins_lookup(spark):
     ])
     probe = _entities(spark, [("q:1", 1, 0, False, None, None, "probe")])
     code = """
-def transform_entities(entities):
-    for e in entities:
-        SetProperty(e, "p", "latest", GetProperty(FindById("x:1"), "p", "v"))
-        ch = GetDatasetChanges("dim", since=1)
-        SetProperty(e, "p", "n_changes", ToString(len(ch)))
-        SetProperty(e, "p", "first_change", GetId(ch[0]))
-        SetProperty(e, "p", "limited", ToString(len(GetDatasetChanges("dim", 0, 2))))
-    return entities
+function transform_entities(entities) {
+    for (e of entities) {
+        SetProperty(e, "p", "latest", GetProperty(FindById("x:1"), "p", "v"));
+        var ch = GetDatasetChanges("dim", 1);
+        SetProperty(e, "p", "n_changes", ToString(ch.length));
+        SetProperty(e, "p", "first_change", GetId(ch[0]));
+        SetProperty(e, "p", "limited", ToString(GetDatasetChanges("dim", 0, 2).length));
+    }
+    return entities;
+}
 """
     (row,) = SC.script_transform(probe, code, lookup=[log]).collect()
     assert row["props"] == {"p:latest": "new", "p:n_changes": "2",
@@ -249,22 +271,64 @@ def test_paged_query_callback_contract(spark, people, nations):
     # transform.go:462-534 PagedQuery(query, pageSize, forEach): pages go
     # to the callback; truthy return continues; fully drained returns []
     code = """
-def transform_entities(entities):
-    for e in entities:
-        pages = []
-        r = PagedQuery({"StartURIs": [GetId(e)], "Via": "p:nation",
-                        "Inverse": False}, 5,
-                       lambda ts: pages.append(ts) or True)
-        SetProperty(e, "p", "via_paged", GetProperty(pages[0][0][2], "p", "name"))
-        SetProperty(e, "p", "n_pages", ToString(len(pages)))
-        SetProperty(e, "p", "cont_len", ToString(len(r)))
-    return entities
+function transform_entities(entities) {
+    for (e of entities) {
+        var pages = [];
+        var r = PagedQuery({"StartURIs": [GetId(e)], "Via": "p:nation",
+                            "Inverse": false}, 5,
+                           (ts) => { pages.push(ts); return true; });
+        SetProperty(e, "p", "via_paged", GetProperty(pages[0][0][2], "p", "name"));
+        SetProperty(e, "p", "n_pages", ToString(pages.length));
+        SetProperty(e, "p", "cont_len", ToString(r.length));
+    }
+    return entities;
+}
 """
     out = {r["id"]: r["props"] for r in
            SC.script_transform(people, code, lookup=[people, nations]).collect()}
     assert out["p:1"]["p:via_paged"] == "NORWAY"
     assert out["p:1"]["p:n_pages"] == "1"
     assert out["p:1"]["p:cont_len"] == "0"  # drained
+
+
+def test_query_skips_relations_held_by_tombstones(spark):
+    # a holder whose latest version is deleted has no relations, in
+    # either direction, exactly as query.related; the target's state
+    # never gates an edge
+    from datahub_spark import query as Q
+
+    log = _entities(spark, [
+        ("h:1", 1, 0, False, None, {"p:link": ["t:1"]}, "d"),
+        ("h:1", 2, 0, True, None, {"p:link": ["t:1"]}, "d"),
+        ("h:2", 1, 0, False, None, {"p:link": ["t:1"]}, "d"),
+        ("t:1", 1, 0, False, {"p:name": "t"}, None, "d"),
+    ])
+    probe = _entities(spark, [("q:1", 1, 0, False, None, None, "probe")])
+    code = """
+function transform_entities(entities) {
+    for (e of entities) {
+        var inv = Query(["t:1"], "p:link", true).map((t) => GetId(t[2]));
+        SetProperty(e, "p", "inverse", inv.join(","));
+        SetProperty(e, "p", "inverse_any",
+                    ToString(Query(["t:1"], "*", true).length));
+        SetProperty(e, "p", "dead_out",
+                    ToString(Query(["h:1"], "*", false).length));
+        SetProperty(e, "p", "live_out",
+                    ToString(Query(["h:2"], "p:link", false).length));
+        var paged = PagedQuery({"StartURIs": ["t:1"], "Via": "p:link",
+                                "Inverse": true});
+        SetProperty(e, "p", "paged", ToString(paged.length));
+    }
+    return entities;
+}
+"""
+    (row,) = SC.script_transform(probe, code, lookup=[log]).collect()
+    assert row["props"] == {"p:inverse": "h:2", "p:inverse_any": "1",
+                            "p:dead_out": "0", "p:live_out": "1",
+                            "p:paged": "1"}
+    assert [r["related"]["id"] for r in Q.related(
+        log, ["t:1"], "p:link", inverse=True).collect()] == ["h:2"]
+    assert Q.related(log, ["h:1"], None).count() == 0
 
 
 def test_lookup_index_row_cap_raises_with_pointer(spark, people):
@@ -287,7 +351,7 @@ def test_lookup_index_row_cap_raises_with_pointer(spark, people):
 def test_fn_cache_is_content_keyed_and_bounded(spark, people):
     # same (code, ns, index) binding -> same cache key (repeat calls
     # reuse the worker-side compiled env instead of growing the cache)
-    code = "def transform_entities(es):\n    return es\n"
+    code = "function transform_entities(es) { return es; }"
     k1 = SC._index_digest(code, {"p": "http://a/"}, None)
     k2 = SC._index_digest(code, {"p": "http://a/"}, None)
     k3 = SC._index_digest(code + " ", {"p": "http://a/"}, None)

@@ -346,3 +346,90 @@ def test_legacy_clientclaims_malformed_acl_is_400(secured):
                    token=admin,
                    payload=[{"Resource": "/datasets/d*", "Action": "read"}])
     assert code == 200
+
+
+# -- script surface: JavaScript only -----------------------------------------
+
+def test_package_calls_no_builtin_exec_eval_or_compile():
+    """Script strings reach the JS interpreter and nothing else: no
+    module under datahub_spark/ calls the builtin exec, eval or compile.
+    Only bare-name calls count, so method calls such as the
+    interpreter's ``self.eval`` or ``re.compile`` pass."""
+    import ast
+    import pathlib
+
+    import datahub_spark
+
+    root = pathlib.Path(datahub_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) \
+                    and isinstance(node.func, ast.Name) \
+                    and node.func.id in ("exec", "eval", "compile"):
+                hits.append(f"{path.relative_to(root)}:{node.lineno} "
+                            f"{node.func.id}")
+    assert hits == []
+
+
+def test_script_endpoints_reject_python_and_scripts_that_do_not_load(
+        spark, tmp_path):
+    """Python source sent to every script endpoint — /query in
+    JavaScript mode (POST or GET), a JavascriptTransform job and a
+    virtual dataset — fails to load as JavaScript: 400, nothing
+    registered or created, and the file the Python would write never
+    appears. A JavaScript script without its entry function is a 400
+    as well."""
+    import base64
+
+    from datahub_spark import jobs as J
+
+    marker = tmp_path / "marker"
+    py = (f"import pathlib\n"
+          f"pathlib.Path({str(marker)!r}).write_text('ran')\n\n"
+          f"def do_query():\n"
+          f"    pathlib.Path({str(marker)!r}).write_text('ran')\n\n"
+          f"def transform_entities(entities):\n"
+          f"    return entities\n\n"
+          f"def build_entities(params, since, limit):\n"
+          f"    return 0\n")
+    no_entry = "var x = 1;"
+    store = S.EntityStore(spark, str(tmp_path / "store"))
+    sched = J.Scheduler(J.JobState(str(tmp_path / "state.json")))
+    srv = UdaServer(store, scheduler=sched)
+    base = srv.start()
+
+    def query(code, method):
+        req = urllib.request.Request(
+            f"{base}/query", data=json.dumps({"query": code}).encode(),
+            method=method,
+            headers={"Content-Type": "application/x-javascript-query"})
+        try:
+            with urllib.request.urlopen(req, timeout=30) as resp:
+                return resp.status
+        except urllib.error.HTTPError as exc:
+            return exc.code
+
+    def job(code):
+        return _req(f"{base}/jobs", "POST", payload={
+            "id": "j",
+            "source": {"Type": "DatasetSource", "Name": "src"},
+            "transform": {"Type": "JavascriptTransform",
+                          "Code": base64.b64encode(code.encode()).decode()},
+            "sink": {"Type": "DatasetSink", "Name": "out"}})[0]
+
+    def virtual(code):
+        return _req(f"{base}/datasets/v", "POST", payload={
+            "VirtualDatasetConfig": {
+                "Transform": base64.b64encode(code.encode()).decode()}})[0]
+
+    try:
+        for code in (py, no_entry):
+            assert query(code, "POST") == query(code, "GET") == 400
+            assert job(code) == 400
+            assert virtual(code) == 400
+        assert not marker.exists()
+        assert sched.jobs == {} and _req(f"{base}/jobs")[1] == []
+        assert "v" not in store.list_datasets()
+    finally:
+        srv.stop()

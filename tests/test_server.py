@@ -685,11 +685,14 @@ def test_dataset_management_over_http(served, spark):
     assert _post(f"{base}/datasets/px?proxy=true",
                  {"ProxyDatasetConfig": {"remoteUrl": "http://peer/datasets/d"}}
                  )[0] == 200
-    # virtual config validated (datasethandler.go:275-279); the served
-    # path only runs the sandboxed JS interpreter, so a Python body is
-    # refused at create time (ADVICE r7: exec() would be RCE)
+    # virtual config validated (datasethandler.go:275-279); the script
+    # is loaded at create time, so a body that is not JavaScript (here
+    # Python) or lacks build_entities is refused and nothing is created
     assert _post(f"{base}/datasets/vx",
                  {"VirtualDatasetConfig": {}})[0] == 400
+    assert _post(f"{base}/datasets/vx",
+                 {"VirtualDatasetConfig": {"Transform": "var x = 1;"}}
+                 )[0] == 400
     py_b64 = ("aW1wb3J0IG9zCmRlZiBidWlsZF9lbnRpdGllcyhwYXJhbXMsIHNpbmNlLCBsaW1"
               "pdCk6CiAgICByZXR1cm4gMAo=")
     assert _post(f"{base}/datasets/vx",
@@ -1077,3 +1080,33 @@ def test_query_get_and_post_same_protocol(served):
     assert via_get == via_post
     assert any(e.get("id") == "e:1" for e in via_get
                if isinstance(e, dict))
+
+
+def test_query_traversal_skips_tombstoned_holders(served):
+    """/query follows only relations whose holder's latest version is
+    live, in both directions and in JavaScript queries, like
+    query.related: tombstoning e:1 (refs kept) removes its p:link edge."""
+    from datahub_spark import query as Q
+
+    store, base = served
+    code, _ = _post(f"{base}/datasets/d/entities", [
+        {"id": "@context", "namespaces": {}},
+        {"id": "e:1", "deleted": True, "refs": {"p:link": ["e:2"]}}])
+    assert code == 200
+    code, body = _post(f"{base}/query", {
+        "startingEntities": ["e:2"], "predicate": "p:link", "inverse": True})
+    assert code == 200 and body[1] == []
+    code, body = _post(f"{base}/query", {
+        "startingEntities": ["e:1"], "predicate": "p:link"})
+    assert code == 200 and body[1] == []
+    js = """function do_query() {
+        WriteQueryResult(Query(["e:1"], "*", false).length);
+        WriteQueryResult(Query(["e:2"], "*", true).length);
+    }"""
+    code, body = _post(
+        f"{base}/query", {"query": js},
+        headers={"Content-Type": "application/x-javascript-query"})
+    assert code == 200 and body == [0, 0]
+    log = store.log(["d"])
+    assert Q.related(log, ["e:2"], "p:link", inverse=True).count() == 0
+    assert Q.related(log, ["e:1"], "p:link").count() == 0
